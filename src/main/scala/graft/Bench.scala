@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main. Methodology (from r4 on):
   *
   *  - `reps` full SWEEPS over all queries in sorted-name order; the
@@ -27,29 +25,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      // the engine contract (SURVEY §1.2) and the NTZ→Timestamp coercion
-      // in Tables both assume UTC wall-clock ≡ instant; an unpinned
-      // session on a non-UTC machine would time a shifted workload
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bisect knob (harness-only, VERDICT r13 #1): force the KMeans HOF
-    // assignment form below the SmallK threshold, so an isolated A/B of
-    // the SAME build separates form cost from everything else
-    if (sys.env.get("SPARK_GRAFT_KMEANS_FORCE_HOF").contains("1"))
-      graft.operators.KMeans.forceHof = true
+    val spark = Session()
     // untimed warmup: representative queries absorb the one-off
     // whole-stage-codegen/JIT infra startup (~5-10 s) that would
     // otherwise land on whichever timed query happens to run first.

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 
 /** Partitioning-invariance sweep: every registered query is executed
   * under two deliberately different physical configurations —
@@ -67,22 +67,9 @@ object DeterminismCheck {
   def main(args: Array[String]): Unit = {
     val sfDir =
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
 
@@ -90,7 +77,8 @@ object DeterminismCheck {
     // reducer count re-deals every hash bucket and the 1 MiB splits
     // re-deal the scan, so accumulation ORDER differs everywhere while
     // the declared result must not
-    val passes = Seq(("A", cpus, "134217728"), ("B", "7", "1048576"))
+    val passes = Seq(("A", Session.cpus.toString, "134217728"),
+      ("B", "7", "1048576"))
     val hashes = passes.map { case (label, parts, split) =>
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       spark.conf.set("spark.sql.files.maxPartitionBytes", split)

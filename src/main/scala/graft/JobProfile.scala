@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run one registered query and print its Spark JOB
   * breakdown — id, wall duration, call site — sorted by cost. The
@@ -10,20 +9,7 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val name = args.headOption.getOrElse("q250_build_incremental")
     // warmup absorbs codegen/JIT startup so the profile reflects the
     // steady-state action costs

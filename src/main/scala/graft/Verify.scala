@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     // dev convenience: SPARK_GRAFT_ONLY=q1_x,q2_y restricts the dump
     val only = sys.env.get("SPARK_GRAFT_ONLY")

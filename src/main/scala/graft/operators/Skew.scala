@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * `data_gen/pseudo_code_rules.txt:2-10`).
   *
   * AQE's automatic skew-join split is far narrower than advertised —
-  * measured (graft.SkewBench, NOTES_r08): it only fires when the join
+  * measured (NOTES_r08): it only fires when the join
   * is the TERMINAL stage of the query; any downstream consumer, even
   * a distribution-agnostic global count, suppresses it, and a skewed
   * AGGREGATION was never its territory at all. Salting splits each

@@ -14,12 +14,7 @@ import graft.operators.Par
   * session active on its own thread. */
 class ParSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .appName("par-spec")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSpark.spark
 
   test("runs every thunk and joins all before returning") {
     val n = new AtomicInteger(0)

@@ -4,27 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for every suite (session startup dominates
-  * test wall-clock otherwise). UTC + tiny shuffle width to keep plans
-  * deterministic and fast on test-sized data. */
+  * test wall-clock otherwise): the factory's confs, with a tiny shuffle
+  * width to keep plans fast on test-sized data. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // local-mode partition DISCOVERY: listing an 80-partition month
-      // table as a distributed job costs ~0.2 s of scheduling per
-      // (refresh, read) pair - a composed build pays it dozens of times
-      // (measured, JobProfile q250). Up to 256 paths the driver lists
-      // in microseconds; beyond that the distributed path is right.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "256")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(
+    "spark.master" -> "local[2]",
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.warehouse.dir" -> "/tmp/graft_test_warehouse")
 }
 
 /** Base: FunSuite + the shared session + tiny helpers. */
